@@ -78,8 +78,7 @@ def main():
     warm_store.write_documents(
         docs.filter(F.xxhash64("doc_id") % 20 == 0)
     )
-    run_pipeline_batched(warm_store, CRAWLER_ORDER, count_rows=False,
-                         nodes_from_triples=True)
+    run_pipeline_batched(warm_store, CRAWLER_ORDER, count_rows=False)
     shutil.rmtree(warm_lake, ignore_errors=True)
 
     clk = os.sysconf("SC_CLK_TCK")
@@ -177,8 +176,7 @@ def main():
     busy0, steal0 = pinned_cpu_stat()
     gc0 = gc_millis()
     t0 = time.time()
-    result = run_pipeline_batched(store, CRAWLER_ORDER, count_rows=False,
-                                  nodes_from_triples=True)
+    result = run_pipeline_batched(store, CRAWLER_ORDER, count_rows=False)
     dt = time.time() - t0
     cpu = jvm_cpu_seconds() - cpu0
     tree_cpu = sampler.total()

@@ -38,6 +38,7 @@ class PeeringdbOrg(SparkCrawler):
     URL = "https://peeringdb.com/api/org"
     NAME = "peeringdb.org"
     EXPECTED_PREDS = ["NAME", "WEBSITE", "COUNTRY", "EXTERNAL_ID", "LOCATED_IN"]
+    EDGELESS_LABELS = ("URL",)  # social-media websites (ref :83)
 
     def transform(self, docs: DataFrame):
         rec = self.m(

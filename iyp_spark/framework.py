@@ -21,7 +21,10 @@ orgs) read the dictionary back — as a broadcast semi-join (S8).
 from __future__ import annotations
 
 import datetime
+import functools
+import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,17 +47,25 @@ class SparkCrawler:
     URL: str = ""
     NAME: str = ""
     EXPECTED_PREDS: list[str] = []
+    # labels whose nodes this crawler may emit without any edge; the batched
+    # runner merges these rows from the node frames, as no endpoint has them
+    EDGELESS_LABELS: tuple[str, ...] = ()
 
     def __init__(self, store: GraphStore):
         self.store = store
         self.spark = store.spark
-        self.cache_mentions = False  # set by the batched runner
+        self.cache_mentions = False  # True only while run() writes
+        self._persisted: list[DataFrame] = []
 
     def m(self, mentions: DataFrame) -> DataFrame:
-        """Mark the parsed-mentions DataFrame: in batched mode it is
-        persisted so the node- and triple-derivation subtrees share one
-        parse pass instead of recomputing it."""
-        return mentions.persist() if self.cache_mentions else mentions
+        """Mark the parsed-mentions DataFrame. Inside ``run()`` it is
+        persisted, so the node and triple writes share one parse pass, and
+        unpersisted when ``run()`` ends; elsewhere it stays lazy."""
+        if not self.cache_mentions:
+            return mentions
+        mentions = mentions.persist()
+        self._persisted.append(mentions)
+        return mentions
 
     # ---------- reference stamping (iyp/__init__.py:701-708) ----------
     def reference_col(self, time_mod: F.Column | None = None) -> F.Column:
@@ -196,7 +207,6 @@ class SparkCrawler:
     def run(self, run_id: str | None = None) -> dict:
         run_id = run_id or uuid.uuid4().hex[:12]
         docs = self.store.read_documents(crawler=self.NAME)
-        was_cached = self.cache_mentions
         self.cache_mentions = True  # share one parse across the subtrees below
         try:
             with StageTimer(self.store, self.NAME, "parse", run_id):
@@ -223,7 +233,10 @@ class SparkCrawler:
                 n_triples = self.store.replace_triples(self.NAME, triples)
                 t.rows = n_triples
         finally:
-            self.cache_mentions = was_cached
+            self.cache_mentions = False
+            for df in self._persisted:
+                df.unpersist()
+            self._persisted.clear()
         return {"crawler": self.NAME, "nodes": n_nodes, "triples": n_triples}
 
     def unit_test(self) -> None:
@@ -243,7 +256,7 @@ class SparkCrawler:
 
 
 # subtype labels applied when deriving the node dictionary from triple
-# endpoints (nodes_from_triples mode): primary label → extra labels
+# endpoints: primary label → extra labels
 SUBTYPE_LABELS = {
     "BGPPrefix": ["Prefix"],
     "RIRPrefix": ["Prefix"],
@@ -255,185 +268,153 @@ SUBTYPE_LABELS = {
 }
 
 
-def derive_nodes_from_triples(store: GraphStore, count_rows: bool = True) -> int:
-    """Build the node dictionary from the endpoints of the materialized
-    triples table: every node that participates in an edge, with subtype
-    labels applied by rule. One columnar scan of the fact table — no second
-    parse pass and no executor-memory caching (the scale path used by the
-    throughput bench; exact per-crawler node props go through the
-    sequential path)."""
+def endpoint_labels(label: F.Column) -> F.Column:
+    """The labels a node derived from a triple endpoint carries: its
+    primary label plus its SUBTYPE_LABELS."""
+    extra = F.coalesce(
+        *[
+            F.when(label == lab, F.array(*[F.lit(x) for x in xs]))
+            for lab, xs in SUBTYPE_LABELS.items()
+        ],
+        F.array().cast("array<string>"),
+    )
+    return F.concat(F.array(label), extra)
+
+
+def beyond_endpoints(crawler: SparkCrawler, node_dfs: list[DataFrame]) -> DataFrame:
+    """The rows of ``crawler``'s node frames that triple endpoints cannot
+    reproduce: rows with props, rows with labels beyond
+    ``endpoint_labels``, and rows of the labels the crawler declares in
+    EDGELESS_LABELS. The filter is pushed into each frame of the union;
+    for a make_nodes frame without props or extra labels it is a constant
+    false, which the optimizer turns into an empty relation: that frame is
+    never scanned. One filter over the union keeps the driver's plan
+    analysis per crawler, not per frame."""
+    return functools.reduce(DataFrame.unionByName, node_dfs).filter(
+        F.col("props").isNotNull()
+        | (F.size(F.array_except("labels", endpoint_labels(F.col("label")))) > 0)
+        | F.col("label").isin(list(crawler.EDGELESS_LABELS))
+    )
+
+
+def derive_nodes_from_triples(store: GraphStore, reference_names: list[str],
+                              crawler_nodes: list[DataFrame],
+                              count_rows: bool = True) -> int:
+    """Merge into the node dictionary every endpoint of the triples under
+    ``reference_names``, labelled by ``endpoint_labels``, together with
+    ``crawler_nodes`` (the ``beyond_endpoints`` rows of the same crawlers),
+    under the ``upsert_nodes`` rules. One columnar scan of the written
+    partitions replaces a second parse pass for every node frame whose
+    rows the endpoints already give."""
     spark = store.spark
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
     # the endpoint dedup is small relative to the fact table — fewer shuffle
     # partitions means fewer tiny tasks and output files for this one job
     spark.conf.set("spark.sql.shuffle.partitions", "16")
-    t = store.read_triples()
+    t = store.read_triples().filter(F.col("reference_name").isin(reference_names))
     subj = t.select(F.col("subj_label").alias("label"), F.col("subj_key").alias("key"))
     obj = t.select(F.col("obj_label").alias("label"), F.col("obj_key").alias("key"))
-    extra = F.coalesce(
-        *[
-            F.when(F.col("label") == lab, F.array(*[F.lit(x) for x in xs]))
-            for lab, xs in SUBTYPE_LABELS.items()
-        ],
-        F.array().cast("array<string>"),
-    )
     nodes = (
         subj.unionByName(obj)
         .dropDuplicates(["label", "key"])
         .select(
             "label", "key",
             F.xxhash64("label", "key").alias("node_id"),
-            F.concat(F.array(F.col("label")), extra).alias("labels"),
+            endpoint_labels(F.col("label")).alias("labels"),
             F.lit(None).cast("map<string,string>").alias("props"),
         )
     )
+    # crawler rows after the endpoints, in crawler order: upsert_nodes
+    # resolves a prop set twice in one batch to the later row
+    for nd in crawler_nodes:
+        nodes = nodes.unionByName(nd)
     try:
         return store.upsert_nodes(nodes, count_rows=count_rows)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
+def _wave(crawler: type[SparkCrawler]) -> int:
+    """Scheduling tier of a crawler: 1 = no graph reads; 2 = reads wave-1
+    output (S8 seed scans); 3 = reads output of wave-2 crawlers too (nro
+    links ASes that peeringdb.ix creates, worldbank links Countries from
+    the same); 4 = reads wave-3 output."""
+    return getattr(crawler, "WAVE", 2 if getattr(crawler, "NEEDS_EXISTING", False) else 1)
+
+
 def run_pipeline_batched(store: GraphStore, crawlers: list[type[SparkCrawler]],
                          count_rows: bool = True,
-                         nodes_from_triples: bool = False,
+                         nodes_from_triples: bool = True,
                          resume: bool = False,
                          fail_after: int | None = None) -> dict:
-    """Throughput path: run every crawler's transform lazily, union all node
-    and triple outputs, and materialize with ONE dictionary merge and ONE
-    partitioned triples write — collapsing per-crawler job overhead into a
-    single shuffle per table. This is the shape of the production weekly
-    build.
+    """Throughput path: the production weekly build. Crawlers run in waves
+    (``WAVE``); every wave runs the same body:
 
-    ``resume=True`` makes THIS path restartable too (north-rule
-    resumability on the production path, not only the sequential loop):
-    crawlers whose 'materialize' lineage record exists are dropped from the
-    batch, so their already-written triple partitions are never recomputed
-    or rewritten. Completion is recorded per crawler AS its partition write
-    lands (the threaded wave-1 writes each log their own lineage row —
-    lineage rows are one-file-per-call, so concurrent logging is safe);
-    the node dictionary is re-derived/upserted idempotently on restart.
-    ``fail_after`` injects a crash after N wave-1 partition writes for the
-    kill/resume test."""
-    # crawlers that read the node dictionary (S8 seed scans) must see the
-    # previous waves' output on disk. WAVE declares the scheduling tier:
-    # 1 = no graph reads; 2 = reads wave-1 output; 3 = reads output of
-    # wave-2 crawlers too (nro links ASes that peeringdb.ix creates,
-    # worldbank links Countries from the same).
-    def _wave(c) -> int:
-        return getattr(c, "WAVE", 2 if getattr(c, "NEEDS_EXISTING", False) else 1)
+    1. transform each crawler lazily;
+    2. write each crawler's ``reference_name=`` partition from a driver
+       thread pool, logging its own 'materialize' lineage row with that
+       write's wall seconds as it lands;
+    3. merge the wave's nodes once with ``derive_nodes_from_triples``:
+       the endpoints of its partitions plus its crawlers'
+       ``beyond_endpoints`` rows.
 
-    done = store.completed_crawlers() if resume else set()
-    skipped = [c.NAME for c in crawlers if c.NAME in done]
-    crawlers = [c for c in crawlers if c.NAME not in done]
-    wave1 = [c for c in crawlers if _wave(c) == 1]
-    later_waves = [
-        [c for c in crawlers if _wave(c) == w]
-        for w in sorted({_wave(c) for c in crawlers} - {1})
-    ]
-    all_docs = store.read_documents()  # one listing, filtered per crawler
-    all_nodes = None
-    all_triples = None
-    per_crawler_triples = {}
-    names = []
-    for cls in wave1:
-        crawler = cls(store)
-        # nodes_from_triples mode runs ONE parse pass (the triples write) and
-        # reconstructs the dictionary from endpoints — no executor-memory
-        # persist, no recompute; otherwise persist shares the parse between
-        # the node and triple subtrees
-        crawler.cache_mentions = not nodes_from_triples
-        names.append(crawler.NAME)
-        node_dfs, triple_dfs = crawler.transform(
-            all_docs.filter(F.col("crawler") == crawler.NAME)
-        )
-        if not nodes_from_triples:
-            for nd in node_dfs:
-                all_nodes = nd if all_nodes is None else all_nodes.unionByName(nd)
-        ct = None
-        for td in triple_dfs:
-            all_triples = td if all_triples is None else all_triples.unionByName(td)
-            ct = td if ct is None else ct.unionByName(td)
-        per_crawler_triples[crawler.NAME] = ct
-    import time as _time
+    The result equals the sequential ``run_pipeline``'s triples and
+    nodes. ``nodes_from_triples`` is accepted for older callers and must
+    be True.
 
+    ``resume=True`` skips the writes of crawlers whose 'materialize'
+    lineage record exists, so their partitions are never recomputed or
+    rewritten; their waves still merge their nodes, which a crash before
+    the merge would otherwise lose (the merge is idempotent).
+    ``fail_after`` injects a crash after N partition writes, made one at a
+    time, for the kill/resume test."""
+    if not nodes_from_triples:
+        raise ValueError("run_pipeline_batched always derives nodes from "
+                         "triple endpoints; nodes_from_triples must be True")
+    t0 = time.time()
     run_id = uuid.uuid4().hex[:12]
-    t0 = _time.time()
-    if nodes_from_triples:
-        # one write job per crawler partition, submitted from concurrent
-        # driver threads: query planning/codegen (driver-serial otherwise)
-        # overlaps executor compute, and each job only writes its own
-        # reference_name partition (concurrent-safe: per-job staging dirs).
-        # Each write logs ITS OWN completion record the moment it lands —
-        # the resume anchor for a mid-wave crash.
-        from concurrent.futures import ThreadPoolExecutor
+    done = store.completed_crawlers()
+    all_docs = store.read_documents()  # one listing, filtered per crawler
+    written: list[int] = []
+    n_nodes = 0
 
-        def _write_one(item):
-            name, df = item
-            n = store.replace_triples(name, df, count_rows=count_rows)
-            store.log_lineage(name, "materialize", n if count_rows else -1,
-                              _time.time() - t0, run_id=run_id)
-            return n
+    def _write(item):
+        name, df = item
+        if fail_after is not None and len(written) >= fail_after:
+            raise RuntimeError("injected failure for resume test")
+        t = time.time()
+        n = store.replace_triples(name, df, count_rows=count_rows)
+        store.log_lineage(name, "materialize", n, time.time() - t, run_id=run_id)
+        written.append(n)
 
-        n_triples = 0
-        if fail_after is not None:
-            # deterministic kill/resume test mode: sequential writes, crash
-            # after exactly `fail_after` completed partitions
-            written = 0
-            for item in per_crawler_triples.items():
-                if written >= fail_after:
-                    raise RuntimeError("injected failure for resume test")
-                n_triples += _write_one(item)
-                written += 1
-        elif per_crawler_triples:
-            with ThreadPoolExecutor(
-                max_workers=min(4, len(per_crawler_triples))
-            ) as ex:
-                counts = list(ex.map(_write_one, per_crawler_triples.items()))
-            n_triples = sum(counts) if count_rows else -1
-        n_nodes = derive_nodes_from_triples(store, count_rows=count_rows)
-    else:
-        n_nodes = store.upsert_nodes(all_nodes, count_rows=count_rows) \
-            if all_nodes is not None else 0
-        n_triples = store.replace_triples_multi(
-            all_triples, count_rows=count_rows) if all_triples is not None else 0
-        for name in names:
-            store.log_lineage(name, "materialize", n_triples,
-                              _time.time() - t0, run_id=run_id)
-    dt = _time.time() - t0
-    store.spark.catalog.clearCache()  # drop persisted mention sets
-    # ---- later waves: crawlers that read the already-built graph ----
-    # Per wave: materialize every transform first (they read dictionary /
-    # triple partitions the writes below will replace), then merge ALL the
-    # wave's node outputs in ONE upsert — per-crawler upserts would each
-    # re-read and rewrite the whole touched dictionary, O(crawlers ×
-    # dictionary bytes) as the crawler count grows.
-    for wave in later_waves:
-        w_nodes = None
-        w_triples: dict[str, DataFrame] = {}
-        for cls in wave:
-            crawler = cls(store)
-            crawler.cache_mentions = True
+    for w in sorted({_wave(c) for c in crawlers}):
+        wave = [cls(store) for cls in crawlers if _wave(cls) == w]
+        crawler_nodes = []
+        triples: dict[str, DataFrame] = {}
+        for crawler in wave:
             node_dfs, triple_dfs = crawler.transform(
                 all_docs.filter(F.col("crawler") == crawler.NAME)
             )
-            for nd in node_dfs:
-                nd = nd.localCheckpoint(eager=True)
-                w_nodes = nd if w_nodes is None else w_nodes.unionByName(nd)
-            ct = triple_dfs[0]
-            for td in triple_dfs[1:]:
-                ct = ct.unionByName(td)
-            w_triples[crawler.NAME] = ct.localCheckpoint(eager=True)
-        if w_nodes is not None:
-            n2 = store.upsert_nodes(w_nodes, count_rows=count_rows)
-            if count_rows:
-                n_nodes += n2
-        for name, ct in w_triples.items():
-            nt = store.replace_triples(name, ct, count_rows=count_rows)
-            if count_rows:
-                n_triples += nt
-            store.log_lineage(name, "materialize", nt, 0.0, run_id=run_id)
-        store.spark.catalog.clearCache()
-    return {"nodes": n_nodes, "triples": n_triples, "seconds": dt}
+            crawler_nodes.append(beyond_endpoints(crawler, node_dfs))
+            if resume and crawler.NAME in done:
+                continue
+            triples[crawler.NAME] = functools.reduce(DataFrame.unionByName, triple_dfs)
+        if w > 1 and done.intersection(triples):
+            # a rerun into an existing lake: graph-reading transforms listed
+            # partitions this wave is about to replace — read them first
+            triples = {n: df.localCheckpoint(eager=True) for n, df in triples.items()}
+            crawler_nodes = [nd.localCheckpoint(eager=True) for nd in crawler_nodes]
+        if triples:
+            workers = 1 if fail_after is not None else min(4, len(triples))
+            with ThreadPoolExecutor(max_workers=workers) as ex:
+                list(ex.map(_write, triples.items()))
+        n_nodes += derive_nodes_from_triples(
+            store, [c.NAME for c in wave], crawler_nodes, count_rows=count_rows)
+    return {
+        "nodes": n_nodes if count_rows else -1,
+        "triples": sum(written) if count_rows else -1,
+        "seconds": time.time() - t0,
+    }
 
 
 def run_pipeline(

@@ -431,7 +431,9 @@ class GraphStore:
 
     def read_lineage(self) -> DataFrame:
         if not _exists(self.lineage_path):
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+            # limit(0) lets the optimizer turn the empty frame into a local
+            # relation, so completed_crawlers() on a new lake runs no job
+            return self.spark.createDataFrame([], LINEAGE_SCHEMA).limit(0)
         return self.spark.read.parquet(self.lineage_path)
 
     def completed_crawlers(self) -> set[str]:

@@ -15,11 +15,11 @@ import json
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--lake", required=True)
-    ap.add_argument("--mode", choices=["batched", "sequential", "resume"],
+    ap.add_argument("--mode", choices=["batched", "sequential"],
                     default="batched")
     ap.add_argument("--resume", action="store_true",
                     help="skip crawlers with a completed materialize record "
-                         "(both modes; 'resume' mode implies it)")
+                         "(both modes)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -32,12 +32,9 @@ def main() -> None:
     # backend from $IYP_STORE_BACKEND (submit_cluster.sh sets "iceberg")
     store = make_store(spark, args.lake)
     if args.mode == "batched":
-        result = run_pipeline_batched(store, CRAWLER_ORDER,
-                                      nodes_from_triples=True,
-                                      resume=args.resume)
+        result = run_pipeline_batched(store, CRAWLER_ORDER, resume=args.resume)
     else:
-        result = run_pipeline(store, CRAWLER_ORDER,
-                              resume=(args.mode == "resume" or args.resume))
+        result = run_pipeline(store, CRAWLER_ORDER, resume=args.resume)
     print(json.dumps(result, default=str))
 
 

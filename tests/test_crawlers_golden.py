@@ -198,9 +198,19 @@ def test_rank_props_have_layer_and_rank(store, built):
     assert int(tranco["props"]["rank"]) >= 1
 
 
+def node_set(store) -> set:
+    """(label, key, labels, props) of every dictionary row, hashable."""
+    return {
+        (r["label"], r["key"], tuple(sorted(r["labels"])),
+         tuple(sorted((r["props"] or {}).items())))
+        for r in store.read_nodes().collect()
+    }
+
+
 def test_batched_pipeline_equals_sequential(spark, store, built):
-    """run_pipeline_batched produces the same triple set as the sequential
-    checkpointed path (two waves; umbrella runs after the batch)."""
+    """The production run_pipeline_batched produces the same triples and
+    the same node dictionary (labels and props included) as the sequential
+    checkpointed path, and logs each partition write's own wall time."""
     import shutil
     import tempfile
 
@@ -208,26 +218,49 @@ def test_batched_pipeline_equals_sequential(spark, store, built):
     from iyp_spark.framework import run_pipeline_batched
     from iyp_spark.store import GraphStore
 
+    cols = ("subj_label", "subj_key", "pred", "obj_label", "obj_key",
+            "reference_name")
     root = tempfile.mkdtemp(prefix="iyp_batched_")
     try:
         st2 = GraphStore(spark, root)
         write_corpus(st2, scale=SCALE)
         run_pipeline_batched(st2, CRAWLER_ORDER)
-        a = {
-            tuple(r)
-            for r in st2.read_triples()
-            .select("subj_label", "subj_key", "pred", "obj_label", "obj_key",
-                    "reference_name")
-            .collect()
-        }
-        b = {
-            tuple(r)
-            for r in store.read_triples()
-            .select("subj_label", "subj_key", "pred", "obj_label", "obj_key",
-                    "reference_name")
-            .collect()
-        }
+        a = {tuple(r) for r in st2.read_triples().select(*cols).collect()}
+        b = {tuple(r) for r in store.read_triples().select(*cols).collect()}
         assert a == b
+        assert node_set(st2) == node_set(store)
+        seconds = {
+            r["crawler"]: r["seconds"]
+            for r in st2.read_lineage().filter("stage = 'materialize'").collect()
+        }
+        assert set(seconds) == {c.NAME for c in CRAWLER_ORDER}
+        assert all(s > 0 for s in seconds.values()), seconds
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_run_unpersists_its_mentions(spark):
+    """SparkCrawler.run persists the mentions its node and triple writes
+    share, and frees them when it ends."""
+    import shutil
+    import tempfile
+
+    from pyspark import StorageLevel
+
+    from iyp_spark.fixtures import write_corpus
+    from iyp_spark.store import GraphStore
+
+    root = tempfile.mkdtemp(prefix="iyp_unpersist_")
+    try:
+        st = GraphStore(spark, root)
+        write_corpus(st, scale=0.05, crawlers=["bgpkit.pfx2asn"])
+        crawler = REGISTRY["bgpkit.pfx2asn"](st)
+        marked = []
+        mark = crawler.m
+        crawler.m = lambda df: marked.append(mark(df)) or marked[-1]
+        crawler.run()
+        assert marked
+        assert all(df.storageLevel == StorageLevel.NONE for df in marked)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
