@@ -153,7 +153,7 @@ def run_ip2prefix(cores: int) -> dict:
             F.lit(None).cast("map<string,string>").alias("props"),
         )
         t0 = time.time()
-        store.upsert_nodes(pfx_nodes.unionByName(ip_nodes), count_rows=False)
+        store.upsert_nodes(pfx_nodes.unionByName(ip_nodes))
         build_s = round(time.time() - t0, 3)
         t0 = time.time()
         Ip2Prefix(store).run()

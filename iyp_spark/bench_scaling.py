@@ -78,7 +78,7 @@ def main():
     warm_store.write_documents(
         docs.filter(F.xxhash64("doc_id") % 20 == 0)
     )
-    run_pipeline_batched(warm_store, CRAWLER_ORDER, count_rows=False)
+    run_pipeline_batched(warm_store, CRAWLER_ORDER)
     shutil.rmtree(warm_lake, ignore_errors=True)
 
     clk = os.sysconf("SC_CLK_TCK")
@@ -176,7 +176,7 @@ def main():
     busy0, steal0 = pinned_cpu_stat()
     gc0 = gc_millis()
     t0 = time.time()
-    result = run_pipeline_batched(store, CRAWLER_ORDER, count_rows=False)
+    result = run_pipeline_batched(store, CRAWLER_ORDER)
     dt = time.time() - t0
     cpu = jvm_cpu_seconds() - cpu0
     tree_cpu = sampler.total()

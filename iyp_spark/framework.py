@@ -298,8 +298,7 @@ def beyond_endpoints(crawler: SparkCrawler, node_dfs: list[DataFrame]) -> DataFr
 
 
 def derive_nodes_from_triples(store: GraphStore, reference_names: list[str],
-                              crawler_nodes: list[DataFrame],
-                              count_rows: bool = True) -> int:
+                              crawler_nodes: list[DataFrame]) -> int:
     """Merge into the node dictionary every endpoint of the triples under
     ``reference_names``, labelled by ``endpoint_labels``, together with
     ``crawler_nodes`` (the ``beyond_endpoints`` rows of the same crawlers),
@@ -329,7 +328,7 @@ def derive_nodes_from_triples(store: GraphStore, reference_names: list[str],
     for nd in crawler_nodes:
         nodes = nodes.unionByName(nd)
     try:
-        return store.upsert_nodes(nodes, count_rows=count_rows)
+        return store.upsert_nodes(nodes)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
@@ -343,7 +342,6 @@ def _wave(crawler: type[SparkCrawler]) -> int:
 
 
 def run_pipeline_batched(store: GraphStore, crawlers: list[type[SparkCrawler]],
-                         count_rows: bool = True,
                          nodes_from_triples: bool = True,
                          resume: bool = False,
                          fail_after: int | None = None) -> dict:
@@ -383,7 +381,7 @@ def run_pipeline_batched(store: GraphStore, crawlers: list[type[SparkCrawler]],
         if fail_after is not None and len(written) >= fail_after:
             raise RuntimeError("injected failure for resume test")
         t = time.time()
-        n = store.replace_triples(name, df, count_rows=count_rows)
+        n = store.replace_triples(name, df)
         store.log_lineage(name, "materialize", n, time.time() - t, run_id=run_id)
         written.append(n)
 
@@ -408,11 +406,10 @@ def run_pipeline_batched(store: GraphStore, crawlers: list[type[SparkCrawler]],
             workers = 1 if fail_after is not None else min(4, len(triples))
             with ThreadPoolExecutor(max_workers=workers) as ex:
                 list(ex.map(_write, triples.items()))
-        n_nodes += derive_nodes_from_triples(
-            store, [c.NAME for c in wave], crawler_nodes, count_rows=count_rows)
+        n_nodes += derive_nodes_from_triples(store, [c.NAME for c in wave], crawler_nodes)
     return {
-        "nodes": n_nodes if count_rows else -1,
-        "triples": sum(written) if count_rows else -1,
+        "nodes": n_nodes,
+        "triples": sum(written),
         "seconds": time.time() - t0,
     }
 

@@ -45,10 +45,8 @@ class CleanLinks:
             self.store.log_lineage(self.NAME, "materialize", 0, 0.0)
             return {"post": self.NAME, "removed": 0}
         # ONE pass over all affected partitions: window keyed by
-        # (reference_name, edge) keeps rank 1, one dynamic-partition
-        # overwrite rewrites every touched partition together. The old
-        # per-partition loop paid a count + checkpoint + write job per
-        # crawler — O(affected crawlers) driver round-trips.
+        # (reference_name, edge) keeps rank 1, one commit rewrites every
+        # touched partition together.
         parts = triples.filter(F.col("reference_name").isin(affected))
         target = parts.filter(F.col("pred").isin(PREDS))
         keep_rest = parts.filter(~F.col("pred").isin(PREDS))
@@ -60,7 +58,8 @@ class CleanLinks:
             .filter("rn = 1")
             .drop("rn")
         )
-        before = parts.count()
+        # from the footers of the partitions about to be replaced: no job
+        before = self.store.triple_rows(affected)
         n = self.store.replace_triples_multi(deduped.unionByName(keep_rest))
         removed_total = before - n
         self.store.log_lineage(self.NAME, "materialize", removed_total, 0.0)

@@ -10,8 +10,9 @@ one you would set on a 1000-executor job reading 100 TB:
   mapInPandas); per-row Python is banned (BASELINE.md "No per-row Python").
 - shuffle partitions sized to cores locally; on a cluster this would be
   ~2-3x total cores and AQE coalesces the rest.
-- dynamic partition overwrite: per-crawler idempotent replace of the
-  triples partition (stand-in for Iceberg MERGE/overwritePartitions).
+- dynamic partition overwrite: ``write_documents`` replaces only the
+  crawler partitions it writes (the node and triple tables commit
+  through ``GraphStore``'s staged partition swap instead).
 """
 
 from __future__ import annotations

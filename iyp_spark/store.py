@@ -1,15 +1,33 @@
 """GraphStore — the lake layout + upsert/replace/lineage primitives.
 
 Stands in for an Iceberg catalog. On a real cluster every method below maps
-1:1 onto an Iceberg operation (noted per method); locally we use partitioned
-parquet + Spark's dynamic partition overwrite, which gives the same
-idempotent per-partition replace semantics the north rule requires.
+1:1 onto an Iceberg operation (noted per method); locally the tables are
+partitioned parquet, and every write is one staged commit (``_commit``):
+
+1. the new rows are written into ``_staging/<uuid>/new/`` under ``root``,
+   outside every table, so readers and in-flight inputs see nothing of it;
+2. the row count comes from the staged parquet footers (no Spark job);
+3. each staged ``label=`` / ``reference_name=`` dir is swapped into its
+   table: the live dir is parked under ``_staging/<uuid>/parked/<table>/``,
+   the staged dir is renamed in, then the staging tree is removed.
+
+A write's inputs stay readable until its swap, so a method may read the
+very partitions it replaces without checkpointing them first. A crash
+between the two renames of a swap leaves a parked dir whose live dir is
+missing; constructing a ``GraphStore`` moves it back. Each partition thus
+holds either its old rows or its new rows, never a mix and never nothing
+(the same guarantee an Iceberg snapshot commit gives). Construct a store
+when no other writer is committing to the same root.
+
+Reads pin the table schema (``spark.read.schema(...)``), so building a
+read DataFrame runs no Spark job: no schema inference over the footers.
 
 Layout under ``root``:
     documents/ crawler=<name>/*.parquet     input corpus (written by fixtures)
     nodes/     label=<label>/*.parquet      node dictionaries
     triples/   reference_name=<c>/*.parquet fact table
     lineage/   *.parquet                    per-stage metrics + checkpoints
+    _staging/  <uuid>/                      one in-flight commit each
 
 Sinks implemented here (SURVEY.md §2.2):
     K1/K2 upsert_nodes    — MERGE-by-key into the node dictionary
@@ -25,14 +43,23 @@ Sources (§2.1):
 from __future__ import annotations
 
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .schema import LINEAGE_SCHEMA, NODES_SCHEMA, TRIPLES_SCHEMA
+from .schema import DOCUMENTS_SCHEMA, LINEAGE_SCHEMA, NODES_SCHEMA, TRIPLES_SCHEMA
+
+# the partition column of each table a commit writes
+_PARTITION_COL = {"nodes": "label", "triples": "reference_name"}
+# the columns inside one triples partition's files
+_TRIPLE_FILE_SCHEMA = T.StructType(
+    [f for f in TRIPLES_SCHEMA.fields if f.name != "reference_name"]
+)
 
 
 def _exists(path: str) -> bool:
@@ -44,10 +71,111 @@ def _exists(path: str) -> bool:
     return False
 
 
+def _parquet_files(path: str) -> list[str]:
+    return [
+        os.path.join(d, f)
+        for d, _, files in os.walk(path) for f in files if f.endswith(".parquet")
+    ]
+
+
+def _footer_rows(path: str) -> int:
+    """Rows of every parquet file under ``path``, read from the footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
+
+
+def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """``df``'s columns of ``schema`` in its order, each cast to the
+    schema's type where its own type differs (nullability aside): every
+    file the store writes reads back under the pinned schema."""
+    have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    return df.select([
+        F.col(f.name) if have[f.name] == f.dataType.simpleString()
+        else F.col(f.name).cast(f.dataType.simpleString()).alias(f.name)
+        for f in schema.fields
+    ])
+
+
+def _triple_rows(df: DataFrame) -> DataFrame:
+    """A crawler's triples as table rows, ``reference_name`` taken from
+    the reference struct."""
+    return _conform(
+        df.withColumn("reference_name", F.col("reference.reference_name")),
+        TRIPLES_SCHEMA,
+    )
+
+
+def _merge_props(old: F.Column, new: F.Column) -> F.Column:
+    """``old`` updated by ``new``: ``new`` wins per prop key, NULL counts as
+    empty, and the result is key-sorted."""
+    empty = F.create_map().cast("map<string,string>")
+    old, new = F.coalesce(old, empty), F.coalesce(new, empty)
+    return F.map_from_entries(F.array_sort(F.concat(
+        F.filter(F.map_entries(old),
+                 lambda e: ~F.array_contains(F.map_keys(new), e["key"])),
+        F.map_entries(new),
+    )))
+
+
 @dataclass
 class GraphStore:
     spark: SparkSession
     root: str
+
+    def __post_init__(self) -> None:
+        # finish or roll back the commits a crashed writer left
+        staging = os.path.join(self.root, "_staging")
+        if os.path.isdir(staging):
+            for name in os.listdir(staging):
+                self._settle(os.path.join(staging, name))
+
+    # ---------- the one commit behind every write ----------
+    def _commit(self, out: DataFrame, table: str, part: str | None = None) -> int:
+        """Write ``out`` as new partitions of ``table`` ("nodes" or
+        "triples") and return its row count. ``out`` is written partitioned
+        by the table's partition column, or, with ``part`` (a
+        ``col=value`` dir name), unpartitioned into that one partition.
+
+        The write lands under ``_staging/<uuid>/new/``; each staged
+        partition dir then replaces its live dir: the live dir is parked
+        under ``_staging/<uuid>/parked/<table>/`` and the staged dir
+        renamed in. ``_settle`` removes the staging tree, and on a failure
+        puts back every parked dir whose staged dir did not land."""
+        stage = os.path.join(self.root, "_staging", uuid.uuid4().hex)
+        new = os.path.join(stage, "new")
+        try:
+            if part is None:
+                out.write.partitionBy(_PARTITION_COL[table]).parquet(new)
+            else:
+                out.write.parquet(os.path.join(new, part))
+            n = _footer_rows(new)
+            live_root = os.path.join(self.root, table)
+            parked = os.path.join(stage, "parked", table)
+            os.makedirs(live_root, exist_ok=True)
+            os.makedirs(parked)
+            for d in sorted(os.listdir(new)):
+                if "=" not in d:  # _SUCCESS and its checksum
+                    continue
+                live = os.path.join(live_root, d)
+                if os.path.isdir(live):
+                    os.rename(live, os.path.join(parked, d))
+                os.rename(os.path.join(new, d), live)
+        finally:
+            self._settle(stage)
+        return n
+
+    def _settle(self, stage: str) -> None:
+        """Move every parked dir under ``stage`` whose live dir is missing
+        back into its table, then remove ``stage``. A parked dir whose live
+        dir exists was replaced by its commit and goes with the tree."""
+        parked = os.path.join(stage, "parked")
+        for table in os.listdir(parked) if os.path.isdir(parked) else []:
+            for d in os.listdir(os.path.join(parked, table)):
+                live = os.path.join(self.root, table, d)
+                if not os.path.exists(live):
+                    os.rename(os.path.join(parked, table, d), live)
+        shutil.rmtree(stage, ignore_errors=True)
 
     # ---------- paths ----------
     @property
@@ -78,7 +206,7 @@ class GraphStore:
         )
 
     def read_documents(self, crawler: str | None = None) -> DataFrame:
-        df = self.spark.read.parquet(self.documents_path)
+        df = self.spark.read.schema(DOCUMENTS_SCHEMA).parquet(self.documents_path)
         if crawler is not None:
             # partition pruning: only this crawler's directory is scanned
             df = df.filter(F.col("crawler") == crawler)
@@ -89,13 +217,13 @@ class GraphStore:
         """S8 seed scan. Empty-store safe."""
         if not _exists(self.nodes_path):
             return self.spark.createDataFrame([], NODES_SCHEMA)
-        df = self.spark.read.parquet(self.nodes_path)
+        df = self.spark.read.schema(NODES_SCHEMA).parquet(self.nodes_path)
         df = df.select([f.name for f in NODES_SCHEMA.fields])
         if label is not None:
             df = df.filter(F.col("label") == label)
         return df
 
-    def upsert_nodes(self, df: DataFrame, count_rows: bool = True) -> int:
+    def upsert_nodes(self, df: DataFrame) -> int:
         """K1/K2/K4: MERGE new keys into the dictionary, union labels, and
         merge props of existing ones (last-writer-wins per key, like the
         reference's ``SET a += props``, iyp/__init__.py:326-446).
@@ -104,11 +232,15 @@ class GraphStore:
         AND t.key=s.key WHEN MATCHED UPDATE SET labels=array_union(..),
         props=map_concat(..) WHEN NOT MATCHED INSERT *``.
 
-        Locally: union + groupBy(label,key) + dynamic overwrite of only the
-        touched label partitions.
+        Locally: union + groupBy(label,key), committed over only the touched
+        label partitions. Returns the rows of those partitions.
         """
-        df = df.select([f.name for f in NODES_SCHEMA.fields])
-        fresh = not _exists(self.nodes_path)
+        df = _conform(df, NODES_SCHEMA)
+        # the touched labels, to read only their partitions; an empty
+        # dictionary has none to read
+        touched = ([r["label"] for r in df.select("label").distinct().collect()]
+                   if _exists(self.nodes_path) else [])
+        existing = self.read_nodes().filter(F.col("label").isin(touched))
         # _ord: monotonic ordinal within the incoming batch — tie-breaker so
         # that two values for the same (label,key,prop) in ONE batch resolve
         # deterministically to the later row (the reference's sequential
@@ -117,22 +249,11 @@ class GraphStore:
         incoming = df.withColumn("_gen", F.lit(1)).withColumn(
             "_ord", F.monotonically_increasing_id()
         )
-        if fresh:
-            # fresh store: pure insert — no read-merge, no self-overwrite
-            # hazard, single pass (the common case in the batched build)
-            union = incoming.withColumn(
-                "labels", F.coalesce(F.col("labels"), F.array(F.col("label")))
-            )
-        else:
-            touched = [r["label"] for r in df.select("label").distinct().collect()]
-            existing = self.read_nodes().filter(F.col("label").isin(touched))
-            union = (
-                existing.withColumn("_gen", F.lit(0)).withColumn("_ord", F.lit(0).cast("long"))
-                .unionByName(incoming)
-                .withColumn(
-                    "labels", F.coalesce(F.col("labels"), F.array(F.col("label")))
-                )
-            )
+        union = (
+            existing.withColumn("_gen", F.lit(0)).withColumn("_ord", F.lit(0).cast("long"))
+            .unionByName(incoming)
+            .withColumn("labels", F.coalesce(F.col("labels"), F.array(F.col("label"))))
+        )
         base = union.groupBy("label", "key").agg(
             F.first("node_id").alias("node_id"),
             F.array_sort(
@@ -156,23 +277,14 @@ class GraphStore:
             )
         )
         merged = base.join(props, ["label", "key"], "left")
-        out = merged.select([f.name for f in NODES_SCHEMA.fields])
-        if not fresh:
-            # localCheckpoint truncates lineage: we are about to overwrite the
-            # very partitions this plan reads (Iceberg MERGE would not need this)
-            out = out.localCheckpoint(eager=True)
-            n = out.count()
+        return self._commit(self._node_layout(merged), "nodes")
+
+    @staticmethod
+    def _node_layout(df: DataFrame) -> DataFrame:
         # bucket within label so hot labels (AS, Prefix) write in parallel
-        out = out.repartition(F.col("label"), F.pmod(F.col("node_id"), F.lit(8)))
-        (
-            out.write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(self.nodes_path)
+        return df.select([f.name for f in NODES_SCHEMA.fields]).repartition(
+            F.col("label"), F.pmod(F.col("node_id"), F.lit(8))
         )
-        if fresh:
-            # count from parquet footers — avoids recomputing the write plan
-            n = self.spark.read.parquet(self.nodes_path).count() if count_rows else -1
-        return n
 
     def enrich_nodes(self, df: DataFrame) -> int:
         """K7: add/overwrite props on existing nodes.
@@ -189,107 +301,84 @@ class GraphStore:
         one per-row map merge — ~half the exchanges for the ip2prefix
         post-processor's props pass. Props merge semantics are identical
         to upsert_nodes: incoming wins per prop key, survivors keep
-        their entries, the stored map is key-sorted."""
+        their entries, the stored map is key-sorted. Duplicate
+        ``(label, key)`` rows in one batch merge the same way, in batch
+        order: the later row wins per prop key, and a row with NULL props
+        sets nothing. Returns the rows of the touched label partitions."""
+        props_t = "map<string,string>"
+        # one aggregate per (label, key): the batch's prop maps in row
+        # order (as entry arrays, which sort; maps do not), folded left
         incoming = (
             df.select("label", "key", "props")
             .withColumn("_ord", F.monotonically_increasing_id())
             .groupBy("label", "key")
-            .agg(F.max_by("props", "_ord").alias("new_props"))
+            .agg(F.array_sort(F.collect_list(
+                F.struct("_ord", F.map_entries("props").alias("e"))
+            )).alias("batch"))
+            .select(
+                "label", "key",
+                F.aggregate(
+                    "batch", F.lit(None).cast(props_t),
+                    lambda acc, x: F.when(x["e"].isNull(), acc).otherwise(
+                        _merge_props(acc, F.map_from_entries(x["e"]))),
+                ).alias("new_props"),
+            )
         )
         touched = [r["label"]
                    for r in incoming.select("label").distinct().collect()]
         if not touched or not _exists(self.nodes_path):
             return 0
         existing = self.read_nodes().filter(F.col("label").isin(touched))
-        empty_map = F.expr("map()").cast("map<string,string>")
-        old_p = F.coalesce(F.col("props"), empty_map)
-        new_p = F.coalesce(F.col("new_props"), empty_map)
-        merged = F.map_from_entries(
-            F.array_sort(
-                F.concat(
-                    F.filter(
-                        F.map_entries(old_p),
-                        lambda e: ~F.array_contains(
-                            F.map_keys(new_p), e["key"]
-                        ),
-                    ),
-                    F.map_entries(new_p),
-                )
-            )
-        )
         out = (
             existing.join(incoming, ["label", "key"], "left")
             .select(
                 "label", "key", "node_id", "labels",
                 F.when(
                     F.col("props").isNull() & F.col("new_props").isNull(),
-                    F.lit(None).cast("map<string,string>"),
-                ).otherwise(merged).alias("props"),
+                    F.lit(None).cast(props_t),
+                ).otherwise(
+                    _merge_props(F.col("props"), F.col("new_props"))
+                ).alias("props"),
             )
-            .select([f.name for f in NODES_SCHEMA.fields])
-            # about to overwrite the partitions this plan reads
-            .localCheckpoint(eager=True)
         )
-        n = out.count()
-        (
-            out.repartition(F.col("label"), F.pmod(F.col("node_id"), F.lit(8)))
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(self.nodes_path)
-        )
-        return n
+        return self._commit(self._node_layout(out), "nodes")
 
     # ---------- triples ----------
     def read_triples(self, reference_name: str | None = None) -> DataFrame:
         if not _exists(self.triples_path):
             return self.spark.createDataFrame([], TRIPLES_SCHEMA)
-        df = self.spark.read.parquet(self.triples_path)
+        df = self.spark.read.schema(TRIPLES_SCHEMA).parquet(self.triples_path)
         df = df.select([f.name for f in TRIPLES_SCHEMA.fields])
         if reference_name is not None:
             df = df.filter(F.col("reference_name") == reference_name)
         return df
 
-    def replace_triples(self, reference_name: str, df: DataFrame,
-                        count_rows: bool = True) -> int:
+    def replace_triples(self, reference_name: str, df: DataFrame) -> int:
         """K5 with rerun semantics: idempotent replace of one crawler's
         partition (ref: delete-by-reference_name then re-append,
-        iyp/__init__.py:660-687, post/ip2prefix.py:113-122).
+        iyp/__init__.py:660-687, post/ip2prefix.py:113-122). Returns the
+        rows written.
 
         Iceberg equivalent: ``overwritePartitions()`` /
         ``DELETE WHERE reference_name = X`` + append.
 
-        The write goes DIRECTLY into this crawler's partition directory
-        (``.../reference_name=<X>/``), not through dynamic partition
-        overwrite on the table root: each writer then owns its own output
-        dir + staging, so concurrent per-crawler writes (the batched
-        runner's thread pool) never race on a shared commit — Spark's file
-        commit protocol is per-path, not multi-writer-safe on one root.
+        The write is unpartitioned, straight into this crawler's staged
+        ``reference_name=<X>/`` dir: each writer owns its own staging dir
+        and partition, so concurrent per-crawler writes (the batched
+        runner's thread pool) never race on a shared commit.
         """
-        part_dir = os.path.join(self.triples_path,
-                                f"reference_name={reference_name}")
-        out = df.withColumn(
-            "reference_name", F.col("reference.reference_name")
-        ).select([f.name for f in TRIPLES_SCHEMA.fields]).drop("reference_name")
-        fresh = not _exists(part_dir)
-        if not fresh:
-            # post-processors derive triples FROM the triples table; truncate
-            # lineage before overwriting the partition being read
-            out = out.localCheckpoint(eager=True)
-            n = out.count()
-        (
-            out.repartition(F.col("pred"), F.pmod(F.col("subj_id"), F.lit(16)))
-            .write.mode("overwrite")
-            .parquet(part_dir)
+        out = _triple_rows(df).drop("reference_name")
+        return self._commit(
+            out.repartition(F.col("pred"), F.pmod(F.col("subj_id"), F.lit(16))),
+            "triples", f"reference_name={reference_name}",
         )
-        if fresh:
-            # fresh partition: the write is the (single) execution of the
-            # plan; counting beforehand would run the whole pipeline twice
-            # (ip2prefix's LPM joins were computed 2x for one number).
-            # Post-write the count comes from parquet footers — metadata
-            # only, no recompute.
-            n = (self.spark.read.parquet(part_dir).count()
-                 if count_rows else -1)
-        return n
+
+    def triple_rows(self, reference_names: list[str]) -> int:
+        """Rows in the named triples partitions, from the parquet footers."""
+        return sum(
+            _footer_rows(os.path.join(self.triples_path, f"reference_name={r}"))
+            for r in reference_names
+        )
 
     def append_triples_batch(self, reference_name: str, df: DataFrame,
                              batch_id: int) -> int:
@@ -301,13 +390,10 @@ class GraphStore:
         idempotent-commit-by-batch-id pattern.
         """
         import glob
-        import shutil
 
-        out = df.withColumn(
-            "reference_name", F.col("reference.reference_name")
-        ).select([f.name for f in TRIPLES_SCHEMA.fields]).drop("reference_name")
-        staging = os.path.join(self.root, f"_staging_b{batch_id}_{uuid.uuid4().hex}")
-        out.write.mode("overwrite").parquet(staging)
+        out = _triple_rows(df).drop("reference_name")
+        staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
+        out.write.parquet(staging)
         part_dir = os.path.join(self.triples_path,
                                 f"reference_name={reference_name}")
         os.makedirs(part_dir, exist_ok=True)
@@ -327,26 +413,14 @@ class GraphStore:
         shutil.rmtree(staging, ignore_errors=True)
         return n
 
-    def replace_triples_multi(self, df: DataFrame, count_rows: bool = True) -> int:
-        """Multi-crawler variant of replace_triples: one write replaces every
-        reference_name partition present in ``df`` (dynamic overwrite)."""
-        fresh = not _exists(self.triples_path)
-        out = df.withColumn(
-            "reference_name", F.col("reference.reference_name")
-        ).select([f.name for f in TRIPLES_SCHEMA.fields])
-        if not fresh:
-            out = out.localCheckpoint(eager=True)
-            n = out.count()
-        (
-            out.repartition(F.col("reference_name"), F.col("pred"),
-                            F.pmod(F.col("subj_id"), F.lit(16)))
-            .write.mode("overwrite")
-            .partitionBy("reference_name")
-            .parquet(self.triples_path)
+    def replace_triples_multi(self, df: DataFrame) -> int:
+        """Multi-crawler variant of replace_triples: one commit replaces
+        every reference_name partition present in ``df``."""
+        return self._commit(
+            _triple_rows(df).repartition(F.col("reference_name"), F.col("pred"),
+                            F.pmod(F.col("subj_id"), F.lit(16))),
+            "triples",
         )
-        if fresh:
-            n = self.spark.read.parquet(self.triples_path).count() if count_rows else -1
-        return n
 
     def compact_triples(self, reference_name: str,
                         target_file_bytes: int = 128 * 1024 * 1024
@@ -361,27 +435,18 @@ class GraphStore:
         multiset exactly; idempotent (re-compacting a compacted partition
         is a no-op-shaped rewrite). Returns (files_before, files_after).
 
-        Follows the store's read-modify-write rule: localCheckpoint
-        before overwriting the directory being read. Iceberg equivalent:
-        `rewrite_data_files` (see store_iceberg.rewrite_data_files_sql) —
-        there it's a snapshot commit, no checkpoint needed."""
-        part_dir = os.path.join(self.triples_path,
-                                f"reference_name={reference_name}")
+        One staged commit, like every write here. Iceberg equivalent:
+        `rewrite_data_files` (see store_iceberg.rewrite_data_files_sql)."""
+        part = f"reference_name={reference_name}"
+        part_dir = os.path.join(self.triples_path, part)
         if not _exists(part_dir):
             return (0, 0)
-
-        def _parquet_files() -> list[str]:
-            return [
-                os.path.join(part_dir, f)
-                for f in os.listdir(part_dir) if f.endswith(".parquet")
-            ]
-
-        before = _parquet_files()
+        before = _parquet_files(part_dir)
         total_bytes = sum(os.path.getsize(f) for f in before)
         n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil
-        df = self.spark.read.parquet(part_dir).localCheckpoint(eager=True)
-        df.repartition(n_out).write.mode("overwrite").parquet(part_dir)
-        return (len(before), len(_parquet_files()))
+        df = self.spark.read.schema(_TRIPLE_FILE_SCHEMA).parquet(part_dir)
+        self._commit(df.repartition(n_out), "triples", part)
+        return (len(before), len(_parquet_files(part_dir)))
 
     def export_golden(self, path: str) -> None:
         """K8: the golden output — ordered triple export
@@ -434,7 +499,7 @@ class GraphStore:
             # limit(0) lets the optimizer turn the empty frame into a local
             # relation, so completed_crawlers() on a new lake runs no job
             return self.spark.createDataFrame([], LINEAGE_SCHEMA).limit(0)
-        return self.spark.read.parquet(self.lineage_path)
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_path)
 
     def completed_crawlers(self) -> set[str]:
         """Resume point: crawlers whose 'materialize' stage completed.

@@ -227,7 +227,7 @@ class IcebergGraphStore(GraphStore):
             df = df.filter(F.col("label") == label)
         return df
 
-    def upsert_nodes(self, df: DataFrame, count_rows: bool = True) -> int:
+    def upsert_nodes(self, df: DataFrame) -> int:
         """MERGE INTO — one snapshot commit, no read-overwrite hazard, no
         localCheckpoint. Incoming duplicates are pre-merged per (label,key)
         exactly like the local backend so MERGE sees one source row per
@@ -258,7 +258,7 @@ class IcebergGraphStore(GraphStore):
         self._ensure("nodes", NODES_SCHEMA, "label")
         self.spark.sql(merge_nodes_sql(self._tbl("nodes"), view))
         self.spark.catalog.dropTempView(view)
-        return self.spark.table(self._tbl("nodes")).count() if count_rows else -1
+        return self.spark.table(self._tbl("nodes")).count()
 
     # ---------- triples ----------
     def read_triples(self, reference_name: str | None = None) -> DataFrame:
@@ -271,8 +271,7 @@ class IcebergGraphStore(GraphStore):
             df = df.filter(F.col("reference_name") == reference_name)
         return df
 
-    def replace_triples(self, reference_name: str, df: DataFrame,
-                        count_rows: bool = True) -> int:
+    def replace_triples(self, reference_name: str, df: DataFrame) -> int:
         """overwritePartitions: atomically replaces exactly the
         reference_name partitions present in the written data — the
         idempotent per-crawler rerun, multi-writer-safe (optimistic
@@ -282,14 +281,18 @@ class IcebergGraphStore(GraphStore):
         ).select([f.name for f in TRIPLES_SCHEMA.fields]).withColumn(
             "_batch_id", F.lit(None).cast("bigint")
         )
-        n = out.count() if count_rows else -1
+        n = out.count()
         self._ensure("triples", TRIPLES_SCHEMA, "reference_name",
                      extra_cols=", _batch_id bigint")
         out.writeTo(self._tbl("triples")).overwritePartitions()
         return n
 
-    def replace_triples_multi(self, df: DataFrame, count_rows: bool = True) -> int:
-        return self.replace_triples("", df, count_rows=count_rows)
+    def replace_triples_multi(self, df: DataFrame) -> int:
+        return self.replace_triples("", df)
+
+    def triple_rows(self, reference_names: list[str]) -> int:
+        return self.read_triples().filter(
+            F.col("reference_name").isin(reference_names)).count()
 
     def append_triples_batch(self, reference_name: str, df: DataFrame,
                              batch_id: int) -> int:

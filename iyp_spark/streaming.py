@@ -74,7 +74,7 @@ def incremental_triples(
         # key-merge and therefore idempotent by construction.
         n = store.append_triples_batch(crawler.NAME, triples, batch_id)
         for nd in node_dfs:
-            store.upsert_nodes(nd, count_rows=False)
+            store.upsert_nodes(nd)
         store.log_lineage(crawler.NAME, f"stream_batch_{batch_id}", n, 0.0)
 
     stream = (

@@ -89,7 +89,7 @@ def run_self_test(spark, scale: float = 0.1, crawlers=None) -> dict:
     root = tempfile.mkdtemp(prefix="prh_lake_")
     store = make_store(spark, root)
     write_corpus(store, scale=scale, crawlers=[c.NAME for c in crawlers])
-    run_pipeline_batched(store, crawlers, count_rows=False)
+    run_pipeline_batched(store, crawlers)
     export = tempfile.mkdtemp(prefix="prh_export_") + "/golden"
     store.export_golden(export)
     return compare(spark, store.read_triples(), spark.read.parquet(export))

@@ -2,7 +2,7 @@
 
 Runs the full crawler pipeline against a lake root. On a cluster the
 SparkSession comes from the submit environment (no local[*] master);
-GraphStore's parquet+dynamic-partition-overwrite maps 1:1 onto Iceberg
+GraphStore's parquet + staged partition commits map 1:1 onto Iceberg
 (MERGE INTO / overwritePartitions) when the catalog is configured.
 """
 

@@ -78,7 +78,7 @@ def test_batched_pipeline_resume_after_crash(spark):
             run_pipeline_batched(store, crawlers, nodes_from_triples=False)
 
         with pytest.raises(RuntimeError, match="injected failure"):
-            run_pipeline_batched(store, crawlers, count_rows=False, fail_after=2)
+            run_pipeline_batched(store, crawlers, fail_after=2)
 
         done_before = store.completed_crawlers()
         assert done_before == {RipeAtlasProbes.NAME, BENCH_CRAWLERS[0].NAME}
@@ -95,7 +95,7 @@ def test_batched_pipeline_resume_after_crash(spark):
 
         before = partition_mtimes(done_before)
 
-        run_pipeline_batched(store, crawlers, count_rows=False, resume=True)
+        run_pipeline_batched(store, crawlers, resume=True)
 
         # completed partitions untouched byte-for-byte (same files, same mtimes)
         assert partition_mtimes(done_before) == before
@@ -110,7 +110,7 @@ def test_batched_pipeline_resume_after_crash(spark):
         # the same dictionary as an uninterrupted build, props included
         ref = GraphStore(spark, ref_root)
         write_corpus(ref, scale=0.1, crawlers=names_all)
-        run_pipeline_batched(ref, crawlers, count_rows=False)
+        run_pipeline_batched(ref, crawlers)
         resumed = node_set(store)
         assert resumed == node_set(ref)
         assert any(label == "AtlasProbe" and props for label, _, _, props in resumed)
@@ -139,7 +139,7 @@ def test_batched_rerun_into_existing_lake(spark):
         write_corpus(store, scale=0.1, crawlers=[c.NAME for c in crawlers])
         graphs = []
         for _ in range(2):
-            run_pipeline_batched(store, crawlers, count_rows=False)
+            run_pipeline_batched(store, crawlers)
             graphs.append((
                 {tuple(r) for r in store.read_triples()
                  .select("subj_key", "pred", "obj_key", "reference_name").collect()},
